@@ -3,21 +3,19 @@
 The reference enumerates 24 feed configs = {all, 7days, current} ×
 {planned, unplanned} × {v0, v1, v1.1, v1.2} in Python lists
 (ServiceAlertBroadcaster.py:51-59) and loops them.  The engine keeps the
-configs as *data* and fans out lightweight ``filter().select()`` plans from
-one cached gold scan — Catalyst reuses the scan across all 24 plans, so the
-fan-out costs one pass over gold regardless of feed count.
+configs as *data*; plans/broadcaster.py renders all of them from one
+projection of gold (a flag per window, the planned flag, one JSON column
+per API version) that it collects once, so the fan-out costs one Spark job
+regardless of feed count.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 from datetime import datetime
-from typing import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from service_alerts_connector_spark.schemas import API_VERSION_COLS
 
 # Reference ServiceAlertBroadcaster.py:51-59.
 WINDOWS = ("all", "7days", "current")
@@ -50,53 +48,24 @@ def all_feed_configs() -> list[FeedConfig]:
 
 
 def time_window_predicate(
-    df: DataFrame,
-    window: str,
-    now: datetime,
-    expiry_col: str = "expiry_date",
-):
+    window: str, now: datetime, expiry_col: str = "expiry_date"
+) -> Column:
     """P4 — ``expiry_date > anchor`` where the anchor depends on the window:
 
     * ``current`` → now                 (Δ = 0)
     * ``7days``   → now - 7 days        (Δ = 7d)
-    * ``all``     → min(expiry) - 1 day (Δ = ∞; anchor from an agg, reference
+    * ``all``     → min(expiry) - 1 day (Δ = ∞; reference
                                          ServiceAlertBroadcaster.py:79-90/A2)
 
-    The 'all' anchor is computed as a scalar subquery-style min() so the
-    predicate shape stays uniform; at scale this is one cheap agg over a
-    column that parquet stores min/max stats for.
+    Every non-null expiry exceeds min(expiry) - 1 day, so ``all`` is
+    ``expiry IS NOT NULL`` with no anchor job.  When gold holds no expiry
+    at all the reference's anchor is null and ``all`` keeps every row; that
+    case needs the whole gold and is left to the caller.
     """
     if window == "current":
         return F.col(expiry_col) > F.lit(now)
     if window == "7days":
         return F.col(expiry_col) > F.lit(now) - F.expr("INTERVAL 7 DAYS")
     if window == "all":
-        anchor = df.agg(
-            (F.min(expiry_col) - F.expr("INTERVAL 1 DAY")).alias("a")
-        ).collect()[0]["a"]
-        if anchor is None:
-            return F.lit(True)
-        return F.col(expiry_col) > F.lit(anchor)
+        return F.col(expiry_col).isNotNull()
     raise ValueError(f"unknown window {window!r}")
-
-
-def feed_dataframe(
-    gold: DataFrame, cfg: FeedConfig, now: datetime
-) -> DataFrame:
-    """P4 + P5 + P3 — window predicate, planned predicate, version projection."""
-    cols = [c for c in API_VERSION_COLS[cfg.version] if c in gold.columns]
-    return (
-        gold.where(time_window_predicate(gold, cfg.window, now))
-        .where(F.col("planned") == F.lit(cfg.planned))  # P5
-        .select(*cols)  # P3
-    )
-
-
-def generate_feeds(
-    gold: DataFrame, now: datetime, configs: list[FeedConfig] | None = None
-) -> Iterator[tuple[FeedConfig, DataFrame]]:
-    """Yield (config, filtered DataFrame) pairs off one cached gold scan
-    (reference generator at ServiceAlertBroadcaster.py:78-98)."""
-    gold = gold.cache()
-    for cfg in configs or all_feed_configs():
-        yield cfg, feed_dataframe(gold, cfg, now)

@@ -1233,18 +1233,6 @@ def _infer_dim(df: DataFrame, vec_col: str) -> int:
     return int(row[0]["d"])
 
 
-def _pair_explode(ids_col: str):
-    """All (a < b) pairs from a sorted id array — expression-only pair
-    generation inside a bucket (no recomputing self-join)."""
-    return F.explode(
-        F.expr(
-            f"flatten(transform({ids_col}, (x, i) -> "
-            f"transform(slice({ids_col}, i + 2, size({ids_col}) - i - 1), "
-            f"y -> struct(x AS id_a, y AS id_b))))"
-        )
-    ).alias("p")
-
-
 _PAIR_CHUNK = 256
 
 
@@ -1254,15 +1242,15 @@ def _slice_pair_explode(ids_col: str):
     (a ≤ b by slice index).
 
     Why two levels (r16, measured on the 20× scale-up): a ``max_bucket``-
-    capped hot bucket is ONE row whose single-level ``_pair_explode``
-    yields C(10 000, 2) ≈ 5·10⁷ pairs serially inside one task — the
-    verify tier's dominant straggler (8-vs-32-core ratio ≈ 1 on
-    dedup_embedding_cosine at 20×; guide §2.5: a single enormous key must
-    be SPLIT, AQE cannot).  Level 1 emits ≤ (n/chunk)² slice-pair rows
-    (≤ 1 600 for a capped bucket — and exactly one row, the whole-array
-    pair, for buckets under the chunk size); an explicit hash
-    redistribution between the levels spreads them, and
-    ``_pairs_of_slice_pair`` expands each row's ≤ chunk² pairs in
+    capped hot bucket is ONE row whose single-level explode
+    (``textdedup._pairs_from_sorted_ids``) yields C(10 000, 2) ≈ 5·10⁷
+    pairs serially inside one task — the verify tier's dominant
+    straggler (8-vs-32-core ratio ≈ 1 on dedup_embedding_cosine at 20×;
+    guide §2.5: a single enormous key must be SPLIT, AQE cannot).  Level 1
+    emits ≤ (n/chunk)² slice-pair rows (≤ 1 600 for a capped bucket — and
+    exactly one row, the whole-array pair, for buckets under the chunk
+    size); an explicit hash redistribution between the levels spreads them,
+    and ``_pairs_of_slice_pair`` expands each row's ≤ chunk² pairs in
     parallel.  The pair SET is unchanged: slices partition the array, so
     {(a, b): a < b} = within-slice pairs ∪ cross pairs of slice_i × slice_j
     for i < j."""

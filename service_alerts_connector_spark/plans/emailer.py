@@ -11,6 +11,9 @@ pandas ``query()`` strings and curried row predicates
 * P7 — the ward/service-area curried predicates become parameterized
   expression builders (``array_contains`` — no UDF).
 
+Fan-out: every config's predicate is evaluated in one projection of gold and
+one generator emits a row per matching config — one scan, no per-config plan.
+
 Sent-dedup (ST6): a delivery-log anti-join on the deterministic email key
 replaces the reference's object-listing probe — set-based, idempotent.
 Compose (X5) renders Jinja2 HTML per row on the driver (volumes are tens of
@@ -100,31 +103,23 @@ EXAMPLE_EMAIL_CONFIGS = [
 ]
 
 
-def email_key(config_name: str) -> Column:
+def email_key_col(config_name_col: Column) -> Column:
     """ST6 — deterministic delivery key: sha256(config ‖ Id ‖ status), the
     engine analog of the reference's status-aware sent-email filenames
     (ServiceAlertEmailer.py:793-814)."""
     return F.sha2(
         F.concat_ws(
-            "|", F.lit(config_name), F.col(ID_COL).cast("string"), F.col("status")
+            "|", config_name_col, F.col(ID_COL).cast("string"), F.col("status")
         ),
         256,
     )
 
 
-def legacy_email_key(config_name: str) -> Column:
+def legacy_email_key_col(config_name_col: Column) -> Column:
     """Pre-status delivery key: sha256(config ‖ Id) — the engine analog of
     the reference's *legacy* filename form, which sent-dedup still honours
     so a live-state migration doesn't resend every historical alert
     (ServiceAlertEmailer.py:793-808 checks both filename forms)."""
-    return F.sha2(
-        F.concat_ws("|", F.lit(config_name), F.col(ID_COL).cast("string")),
-        256,
-    )
-
-
-def legacy_email_key_col(config_name_col: Column) -> Column:
-    """legacy_email_key with the config name as a column (join fan-out)."""
     return F.sha2(
         F.concat_ws("|", config_name_col, F.col(ID_COL).cast("string")), 256
     )
@@ -154,56 +149,29 @@ def pending_emails(
     log.  Output: one row per (config, alert) still to send, with the
     delivery key.
 
-    The gold scan is reused once per config — the *caller* owns its cache
-    lifecycle (run_service_alerts caches gold before the fan-out and
-    unpersists after send_pending's eager collect).  Caching here leaked
-    one pinned DataFrame per micro-batch in the foreachBatch path."""
-    parts = []
-    for cfg in configs:
-        parts.append(
-            gold.where(cfg.predicate())
-            .withColumn("config_name", F.lit(cfg.name))
-            .withColumn("recipients", F.lit(list(cfg.recipients)).cast("array<string>"))
-            .withColumn("email_key", email_key(cfg.name))
-            .withColumn("legacy_email_key", legacy_email_key(cfg.name))
-        )
-    fanned = parts[0]
-    for p in parts[1:]:
-        fanned = fanned.unionByName(p)
-    if sent_log is not None:
-        fanned = _anti_join_sent(fanned, sent_log)
-    return fanned
-
-
-def pending_emails_joined(
-    gold: DataFrame,
-    config_rows: DataFrame,
-    sent_log: DataFrame | None = None,
-) -> DataFrame:
-    """Scale path for the structured (P7-style) configs: configs as a
-    DataFrame joined against gold, instead of one union branch per config.
-
-    ``config_rows`` schema: (config_name string, recipients array<string>,
-    ward string, service_area string, planned boolean) — null fields are
-    wildcards.  The join condition evaluates each predicate family as data:
-    100 configs or 100 000 configs produce the *same* two-operator plan
-    (broadcast join + anti-join), where the union path grows linearly in
-    plan size.  Free-form SQL-string configs (P6) stay on `pending_emails`.
-    """
-    cfg = F.broadcast(config_rows)
-    cond = (
-        (cfg["ward"].isNull() | (
-            F.array_contains(F.coalesce(gold["inferred_wards"],
-                                        F.array().cast("array<string>")),
-                             cfg["ward"])
-            & (F.coalesce(gold["area_type"], F.lit("")) != "Citywide")
-        ))
-        & (cfg["service_area"].isNull()
-           | (gold["service_area"] == cfg["service_area"]))
-        & (cfg["planned"].isNull() | (gold["planned"] == cfg["planned"]))
+    One projection tags each gold row with the (config_name, recipients)
+    of every config whose predicate it passes, and one ``inline`` emits a
+    row per tag: gold is scanned once and the plan holds no union, however
+    many configs there are."""
+    tags = F.filter(
+        F.array(
+            *[
+                F.when(
+                    cfg.predicate(),
+                    F.struct(
+                        F.lit(cfg.name).alias("config_name"),
+                        F.lit(list(cfg.recipients))
+                        .cast("array<string>")
+                        .alias("recipients"),
+                    ),
+                )
+                for cfg in configs
+            ]
+        ),
+        lambda t: t.isNotNull(),
     )
     fanned = (
-        gold.join(cfg, cond)
+        gold.select("*", F.inline(tags))
         .withColumn("email_key", email_key_col(F.col("config_name")))
         .withColumn(
             "legacy_email_key", legacy_email_key_col(F.col("config_name"))
@@ -214,14 +182,11 @@ def pending_emails_joined(
     return fanned
 
 
-def email_key_col(config_name_col: Column) -> Column:
-    """email_key with the config name as a column (join fan-out path)."""
-    return F.sha2(
-        F.concat_ws(
-            "|", config_name_col, F.col(ID_COL).cast("string"), F.col("status")
-        ),
-        256,
-    )
+def email_subject(rec: dict) -> str:
+    """ST7/X5 — updates get the "Updated" subject (reference
+    ServiceAlertEmailer.py:693-696)."""
+    prefix = "Updated Service Alert" if rec.get("_is_update") else "Service Alert"
+    return f"{prefix}: {rec.get('title', '')}"
 
 
 def render_email_html(rec: dict) -> str:
@@ -242,18 +207,13 @@ def render_email_html(rec: dict) -> str:
         if citywide and k in ("area", "area_type", "location"):
             continue
         fields[k] = str(v)
-    subject_prefix = (
-        "Updated Service Alert" if rec.get("_is_update") else "Service Alert"
-    )
     template = jinja2.Template(
         "<html><body><h1>{{ subject }}</h1>"
         "<table>{% for k, v in fields.items() %}"
         "<tr><td>{{ k }}</td><td>{{ v }}</td></tr>{% endfor %}</table>"
         "</body></html>"
     )
-    return template.render(
-        subject=f"{subject_prefix}: {rec.get('title', '')}", fields=fields
-    )
+    return template.render(subject=email_subject(rec), fields=fields)
 
 
 Transport = Callable[[tuple[str, ...], str, str], None]  # (to, subject, html)
@@ -277,16 +237,7 @@ def send_pending(
     for r in rows:
         rec = r.asDict()
         html = render_email_html(rec)
-        # ST7/X5 — updates get the "Updated" subject (reference
-        # ServiceAlertEmailer.py:693-696)
-        prefix = (
-            "Updated Service Alert" if rec.get("_is_update") else "Service Alert"
-        )
-        transport(
-            tuple(rec["recipients"]),
-            f"{prefix}: {rec.get('title', '')}",
-            html,
-        )
+        transport(tuple(rec["recipients"]), email_subject(rec), html)
         if archive_root is not None:
             from pathlib import Path
 

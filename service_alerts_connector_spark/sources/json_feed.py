@@ -1,14 +1,8 @@
-"""S7/S8 — JSON feed sinks.
+"""S8 — per-alert JSON object sink.
 
-The reference serializes each feed as a single records-oriented JSON array
-object with ISO dates (ServiceAlertBroadcaster.py:100-114) and, in the recon
-hop, one JSON object per alert per API version (alerts-recon.py:50-81).
-
-Feed volumes are small (these are serving artifacts, not data lakes), so the
-engine renders rows JVM-side with ``to_json(struct(*))`` — null keys dropped,
-ISO timestamps — and materializes the array on the driver.  The heavy lifting
-(filter/project) stayed distributed; only the final tiny byte-string is
-driver-side, exactly where an object-store PUT has to happen anyway.
+The reference's recon hop writes one JSON object per alert per API version
+(alerts-recon.py:50-81).  The S7 feed arrays are rendered JVM-side by
+plans/broadcaster.py.
 """
 
 from __future__ import annotations
@@ -17,28 +11,6 @@ import json
 from pathlib import Path
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def dataframe_to_json_records(df: DataFrame) -> str:
-    """Render a (small, already-filtered) DataFrame as a JSON array string
-    with ISO-8601 timestamps and nulls stripped — the reference's
-    ``to_json(orient='records', date_format='iso')`` contract."""
-    rows = df.select(
-        F.to_json(
-            F.struct(*df.columns), {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSS"}
-        ).alias("j")
-    ).collect()
-    return "[" + ",".join(r["j"] for r in rows) + "]"
-
-
-def write_feed(df: DataFrame, out_root: str, rel_path: str) -> str:
-    """S7 — write one feed file (local path or mounted object store)."""
-    payload = dataframe_to_json_records(df)
-    path = Path(out_root) / rel_path
-    path.parent.mkdir(parents=True, exist_ok=True)
-    path.write_text(payload)
-    return str(path)
 
 
 def write_per_alert_objects(

@@ -1,20 +1,14 @@
-"""Broadcaster fan-out tests (SURVEY P3-P5, §3.3) + JSON sink shape."""
+"""Broadcaster fan-out tests (SURVEY P3-P5, §3.3) + JSON sink shape, asserted
+on the files ``broadcast_feeds`` writes."""
 
 from __future__ import annotations
 
 import json
 from datetime import datetime
 
-from service_alerts_connector_spark.operators.feeds import (
-    FeedConfig,
-    all_feed_configs,
-    feed_dataframe,
-    generate_feeds,
-)
+from service_alerts_connector_spark.operators.feeds import all_feed_configs
+from service_alerts_connector_spark.plans.broadcaster import broadcast_feeds
 from service_alerts_connector_spark.schemas import V0_COLS, V1_2_COLS
-from service_alerts_connector_spark.sources.json_feed import (
-    dataframe_to_json_records,
-)
 
 NOW = datetime(2024, 2, 14, 12, 0, 0)
 
@@ -30,8 +24,21 @@ GOLD_ROWS = [
 SCHEMA = "Id long, planned boolean, expiry_date timestamp, status string, tweet_text string"
 
 
-def _gold(spark):
-    return spark.createDataFrame(GOLD_ROWS, SCHEMA)
+def _gold(spark, rows=GOLD_ROWS):
+    return spark.createDataFrame(rows, SCHEMA)
+
+
+def _feeds(spark, tmp_path, rows=GOLD_ROWS):
+    """Broadcast ``rows`` and read every written feed back, by path."""
+    out = tmp_path / "feeds"
+    written = broadcast_feeds(_gold(spark, rows), str(out), now=NOW)
+    feeds = {p: json.loads((out / p).read_text()) for p in written}
+    assert written == {p: len(recs) for p, recs in feeds.items()}
+    return feeds
+
+
+def _ids(feeds, path):
+    return sorted(r["Id"] for r in feeds[path])
 
 
 def test_config_matrix_is_24():
@@ -40,34 +47,79 @@ def test_config_matrix_is_24():
     assert len({c.path for c in cfgs}) == 24
 
 
-def test_current_window(spark):
-    df = feed_dataframe(_gold(spark), FeedConfig("current", False, "v0"), NOW)
-    assert [r["Id"] for r in df.collect()] == [3]
+def test_current_window(spark, tmp_path):
+    feeds = _feeds(spark, tmp_path)
+    assert _ids(feeds, "v0/service-alerts/current/unplanned.json") == [3]
 
 
-def test_7days_window(spark):
-    df = feed_dataframe(_gold(spark), FeedConfig("7days", False, "v0"), NOW)
-    assert sorted(r["Id"] for r in df.collect()) == [2, 3]
+def test_7days_window(spark, tmp_path):
+    feeds = _feeds(spark, tmp_path)
+    assert _ids(feeds, "v0/service-alerts/7days/unplanned.json") == [2, 3]
 
 
-def test_all_window_includes_everything(spark):
-    df = feed_dataframe(_gold(spark), FeedConfig("all", True, "v0"), NOW)
-    assert sorted(r["Id"] for r in df.collect()) == [1, 4]
+def test_all_window_includes_everything(spark, tmp_path):
+    feeds = _feeds(spark, tmp_path)
+    assert _ids(feeds, "v0/service-alerts/all/planned.json") == [1, 4]
 
 
-def test_version_projection(spark):
-    gold = _gold(spark)
-    v0 = feed_dataframe(gold, FeedConfig("current", False, "v0"), NOW)
-    v12 = feed_dataframe(gold, FeedConfig("current", False, "v1.2"), NOW)
-    assert set(v0.columns) <= set(V0_COLS)
-    assert "tweet_text" not in v0.columns
-    assert "tweet_text" in v12.columns
-    assert set(v12.columns) <= set(V1_2_COLS)
+def test_all_window_without_any_expiry_keeps_every_row(spark, tmp_path):
+    """The reference's min(expiry) anchor is null when gold holds no
+    expiry: the 'all' feeds then keep every row of their planned flag."""
+    rows = [dict(r, expiry_date=None) for r in GOLD_ROWS]
+    feeds = _feeds(spark, tmp_path, rows)
+    assert _ids(feeds, "v0/service-alerts/all/planned.json") == [1, 4]
+    assert _ids(feeds, "v0/service-alerts/all/unplanned.json") == [2, 3]
+    assert feeds["v0/service-alerts/current/unplanned.json"] == []
+    assert feeds["v0/service-alerts/7days/planned.json"] == []
 
 
-def test_generate_feeds_yields_all(spark):
-    feeds = list(generate_feeds(_gold(spark), NOW))
-    assert len(feeds) == 24
+def test_all_window_drops_null_expiry_among_expiries(spark, tmp_path):
+    rows = GOLD_ROWS + [
+        {"Id": 5, "planned": True, "expiry_date": None, "status": "Open", "tweet_text": None}
+    ]
+    feeds = _feeds(spark, tmp_path, rows)
+    assert _ids(feeds, "v0/service-alerts/all/planned.json") == [1, 4]
+
+
+def test_null_planned_row_is_in_no_feed(spark, tmp_path):
+    rows = GOLD_ROWS + [
+        {"Id": 6, "planned": None, "expiry_date": datetime(2024, 3, 1), "status": "Open", "tweet_text": None}
+    ]
+    feeds = _feeds(spark, tmp_path, rows)
+    assert all(r["Id"] != 6 for recs in feeds.values() for r in recs)
+
+
+def test_version_projection(spark, tmp_path):
+    feeds = _feeds(spark, tmp_path)
+    v0 = feeds["v0/service-alerts/current/unplanned.json"][0]
+    v12 = feeds["v1.2/service-alerts/current/unplanned.json"][0]
+    assert set(v0) <= set(V0_COLS)
+    assert "tweet_text" not in v0
+    assert v12["tweet_text"] == "live"
+    assert set(v12) <= set(V1_2_COLS)
+
+
+def test_broadcast_feeds_writes_24_files(spark, tmp_path):
+    feeds = _feeds(spark, tmp_path)
+    assert set(feeds) == {c.path for c in all_feed_configs()}
+    assert all((tmp_path / "feeds" / p).is_file() for p in feeds)
+
+
+def test_broadcast_feeds_is_one_pass(spark, tmp_path):
+    """All 24 feeds come from one collect of a parquet-backed gold: at most
+    2 Spark jobs, whatever the feed count (one plan per feed took 88)."""
+    src = str(tmp_path / "gold")
+    _gold(spark).write.parquet(src)
+    gold = spark.read.parquet(src)
+    sc = spark.sparkContext
+    sc.setJobGroup("broadcast-feeds-one-pass", "feeds")
+    try:
+        written = broadcast_feeds(gold, str(tmp_path / "feeds"), now=NOW)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("broadcast-feeds-one-pass")
+    assert len(written) == 24
+    assert 1 <= len(jobs) <= 2
 
 
 def test_api_sql_views(spark):
@@ -91,12 +143,14 @@ def test_api_sql_views(spark):
     assert "tweet_text" not in spark.table("service_alerts_v0").columns
 
 
-def test_json_records_shape(spark):
-    df = feed_dataframe(_gold(spark), FeedConfig("current", False, "v1.2"), NOW)
-    payload = json.loads(dataframe_to_json_records(df))
+def test_json_records_shape(spark, tmp_path):
+    feeds = _feeds(spark, tmp_path)
+    payload = feeds["v1.2/service-alerts/current/unplanned.json"]
     assert isinstance(payload, list) and len(payload) == 1
     rec = payload[0]
     assert rec["Id"] == 3
     assert rec["expiry_date"].startswith("2024-02-20T00:00:00")
     # nulls are stripped, not serialized
     assert all(v is not None for v in rec.values())
+    week = feeds["v1.2/service-alerts/7days/unplanned.json"]
+    assert "tweet_text" not in next(r for r in week if r["Id"] == 2)

@@ -20,10 +20,14 @@ from tests.fixtures import RAW_ALERTS
 NOW = datetime(2024, 2, 14, 12, 0)
 
 
-def test_two_microbatch_pipeline(spark, tmp_path):
+def _n_cached(spark) -> int:
     # session is shared across the test suite: measure cache hygiene as a
     # delta, not an absolute (another module's cache may legitimately live)
-    n_cached_before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def _stage_two_pages(tmp_path):
+    """Batch 1 creates alerts 23121-23123; batch 2 updates 23121's status."""
     staged = tmp_path / "staged"
     staged.mkdir()
     with open(staged / "p1.jsonl", "w") as f:
@@ -34,6 +38,12 @@ def test_two_microbatch_pipeline(spark, tmp_path):
     updated["_ingest_seq"] = 100
     with open(staged / "p2.jsonl", "w") as f:
         f.write(json.dumps(updated) + "\n")
+    return staged
+
+
+def test_two_microbatch_pipeline(spark, tmp_path):
+    n_cached_before = _n_cached(spark)
+    staged = _stage_two_pages(tmp_path)
 
     notifications_log: list[int] = []
     outbox: list[tuple] = []
@@ -94,11 +104,24 @@ def test_two_microbatch_pipeline(spark, tmp_path):
     assert subjects[0].startswith("Service Alert:")  # first sight
     assert subjects[1].startswith("Updated Service Alert:")  # status change
 
-    # cache hygiene: the email fan-out cache is released per batch — the
-    # two-batch run must not leave any extra DataFrame pinned (the old
-    # pending_emails-owned cache leaked one per micro-batch)
-    n_cached_after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    assert n_cached_after <= n_cached_before
+    # cache hygiene: the two-batch run must not leave any DataFrame pinned
+    assert _n_cached(spark) <= n_cached_before
+
+
+def test_feed_only_pipeline_pins_no_cache(spark, tmp_path):
+    """Feeds without email configs: no micro-batch may leave gold pinned
+    (a broadcaster-owned cache grew by one per batch)."""
+    n_cached_before = _n_cached(spark)
+    staged = _stage_two_pages(tmp_path)
+    sinks = PipelineSinks(feeds_root=str(tmp_path / "feeds"))
+
+    def batch_fn(bdf, bid):
+        run_micro_batch(bdf, str(tmp_path / "lake"), sinks=sinks, now=NOW)
+
+    stream = stream_raw_alerts(spark, str(staged), max_files_per_trigger=1)
+    run_available_now(stream, batch_fn, str(tmp_path / "ckpt"))
+    assert (tmp_path / "feeds" / "v1.2/service-alerts/all/unplanned.json").exists()
+    assert _n_cached(spark) <= n_cached_before
 
 
 def test_streaming_sharepoint_source_equals_batch_run(spark, tmp_path):

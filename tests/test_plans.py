@@ -130,7 +130,9 @@ def test_emailer_legacy_sent_key_fallback(spark):
     """A sent log migrated from the legacy (status-less) key form still
     dedups: reference checks both filename forms
     (ServiceAlertEmailer.py:793-808)."""
-    from service_alerts_connector_spark.plans.emailer import legacy_email_key
+    from service_alerts_connector_spark.plans.emailer import (
+        legacy_email_key_col,
+    )
 
     gold = spark.createDataFrame(
         [(1, "Water & Sanitation", "Leak", "Open", True, "Official Planning Suburb",
@@ -143,7 +145,9 @@ def test_emailer_legacy_sent_key_fallback(spark):
     # a log holding alert 1's LEGACY key only (as a migrated store would)
     legacy_log = (
         gold.where("Id = 1")
-        .select(legacy_email_key("water-planned").alias("email_key"))
+        .select(
+            legacy_email_key_col(F.lit("water-planned")).alias("email_key")
+        )
     )
     pending = pending_emails(gold, EXAMPLE_EMAIL_CONFIGS, legacy_log)
     got = {(r["config_name"], r["Id"]) for r in pending.collect()}

@@ -198,7 +198,9 @@ def test_chunked_pairs_equal_single_level_explode(spark):
     from service_alerts_connector_spark.operators.similarity import (
         _PAIR_CHUNK,
         _chunked_pairs,
-        _pair_explode,
+    )
+    from service_alerts_connector_spark.operators.textdedup import (
+        _pairs_from_sorted_ids,
     )
 
     rows = [
@@ -211,7 +213,7 @@ def test_chunked_pairs_equal_single_level_explode(spark):
     want = set(
         map(
             tuple,
-            b.select(_pair_explode("ids"))
+            b.select(_pairs_from_sorted_ids("ids").alias("p"))
             .select("p.id_a", "p.id_b")
             .distinct()
             .collect(),
